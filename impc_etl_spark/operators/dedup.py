@@ -1081,6 +1081,13 @@ def connected_components(
     If the loop hits ``max_iterations`` with labels still changing the
     result may split true groups — a ``RuntimeWarning`` is raised so the
     caller can't miss it.
+
+    Assumes no self-loop pairs (``a == b``), which LSH bucket expansion
+    never emits. A self-loop is not filtered: it puts its id in the
+    output as a singleton group even when the id has no other pair, and
+    the skipped round-0 convergence check (string ids) relies on at
+    least one pair with ``a != b``; without one, the loop only runs one
+    extra round.
     """
     import warnings
 

@@ -198,6 +198,13 @@ def cosine_banded_pairs(
     candidates — grow ``band_width`` with corpus size. Deterministic for a
     fixed seed, so the result is exactly reproducible in ANSI SQL (the
     planes are literals).
+
+    Precondition: ``id_col`` is unique in ``df``. The terminal
+    ``distinct`` removes a pair found in several bands only because each
+    id names one vector, so every occurrence carries the same
+    ``cos_sim``; with a repeated id the joins back to the vectors pair
+    every copy, and one (vec_a, vec_b) can come out several times with
+    different scores.
     """
     from impc_etl_spark.operators.dedup import _bucket_pairs
 

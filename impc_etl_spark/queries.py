@@ -27,6 +27,7 @@ from impc_etl_spark.operators import partitioning as part_ops
 from impc_etl_spark.operators.partitioning import fan_out
 from impc_etl_spark.operators import windows as win_ops
 from impc_etl_spark.operators.derivation import compile_derivation
+from impc_etl_spark.sources.readers import _read_source
 
 
 def _rnd(c, n: int):
@@ -43,39 +44,32 @@ def _rnd(c, n: int):
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Source table ``name``, read with its declared schema (see
+    ``session.load_tables``)."""
     # Defensive: the harness may hand us a session built without our
-    # configs. nanosAsLong: events.parquet is TIMESTAMP(NANOS) and would
-    # throw PARQUET_TYPE_ILLEGAL otherwise. UTC: epoch outputs
-    # (unix_timestamp) must not depend on the host timezone — the oracle
-    # treats naive timestamps as UTC. Both are runtime-settable.
+    # configs. UTC: epoch outputs (unix_timestamp) must not depend on the
+    # host timezone — the oracle treats naive timestamps as UTC. It is
+    # runtime-settable.
     try:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         spark.conf.set("spark.sql.session.timeZone", "UTC")
     except Exception:
         # Narrow optional-feature guard only: a session that forbids
-        # runtime conf changes (or predates the nanos flag) still reads
-        # tables whose ts columns are already typed; nothing else is
+        # runtime conf changes still reads the tables; nothing else is
         # swallowed here.
         pass
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return _read_source(spark, sf_dir, name)
 
 
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """events table with ts normalized to TimestampType.
+    """events table with ts as a session-zone TimestampType.
 
-    The driver writes ts as parquet TIMESTAMP(NANOS); Spark has no ns
-    timestamp, so the session reads it as long nanos
-    (spark.sql.legacy.parquet.nanosAsLong) and we truncate to µs with
-    integer arithmetic (a double division would lose precision at 1e18 ns).
+    events.parquet holds ts as TIMESTAMP(MICROS) without a UTC
+    adjustment, which the declared schema reads as timestamp_ntz; the
+    session time zone is pinned to UTC, so the cast is the same instant
+    the oracle computes.
     """
     ev = _t(spark, sf_dir, "events")
-    ts_type = dict(ev.dtypes).get("ts")
-    if ts_type == "bigint":
-        ev = ev.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-    elif ts_type and ts_type != "timestamp":
-        # Builds that ignore nanosAsLong surface TIMESTAMP(NANOS) as
-        # TIMESTAMP_NTZ (µs-truncated); session TZ is pinned UTC so the
-        # cast is the same instant the oracle computes.
+    if "ts" in ev.columns:
         ev = ev.withColumn("ts", F.col("ts").cast("timestamp"))
     return ev
 
@@ -2223,14 +2217,15 @@ def media_frame_sample(spark, sf_dir):
 # North-star: embeddings (similarity search)
 # ---------------------------------------------------------------------------
 
-def _query_vec(spark, sf_dir):
-    emb = _t(spark, sf_dir, "embeddings")
+def _query_vec(emb):
+    """vec_id 0's embedding from the caller's already-loaded ``emb``: one
+    driver-side lookup, no second read of the table."""
     return emb.where(F.col("vec_id") == 0).select("embedding").head()[0]
 
 
 def emb_cosine_topk(spark, sf_dir):
     emb = _t(spark, sf_dir, "embeddings")
-    return sim_ops.cosine_topk(emb, _query_vec(spark, sf_dir), k=10)
+    return sim_ops.cosine_topk(emb, _query_vec(emb), k=10)
 
 
 def emb_near_dup_pairs(spark, sf_dir):
@@ -2260,7 +2255,7 @@ def emb_ann_topk(spark, sf_dir):
     (seeded hyperplanes), so the oracle replays the query bucket's sign
     bits + exact cosine within the probed bucket in DuckDB."""
     emb = _t(spark, sf_dir, "embeddings")
-    return sim_ops.ann_topk(emb, _query_vec(spark, sf_dir), k=10, n_planes=8)
+    return sim_ops.ann_topk(emb, _query_vec(emb), k=10, n_planes=8)
 
 
 def emb_ann_multiprobe_topk(spark, sf_dir):
@@ -2271,7 +2266,7 @@ def emb_ann_multiprobe_topk(spark, sf_dir):
     hyperplanes, so the oracle replays the Hamming-≤1 probe set exactly."""
     emb = _t(spark, sf_dir, "embeddings")
     return sim_ops.ann_topk(
-        emb, _query_vec(spark, sf_dir), k=10, n_planes=8, multiprobe=1
+        emb, _query_vec(emb), k=10, n_planes=8, multiprobe=1
     )
 
 
@@ -2282,7 +2277,7 @@ def emb_ivf_topk(spark, sf_dir):
     emb = _t(spark, sf_dir, "embeddings")
     indexed, centroids = sim_ops.ivf_build(emb, nlist=8, iterations=2)
     return sim_ops.ivf_topk(
-        indexed, centroids, _query_vec(spark, sf_dir), k=10, nprobe=8
+        indexed, centroids, _query_vec(emb), k=10, nprobe=8
     )
 
 
@@ -2376,7 +2371,7 @@ def emb_rp_topk(spark, sf_dir):
 
     emb = _t(spark, sf_dir, "embeddings")
     planes = sim_ops.hyperplane_planes(64, 16, seed=7)
-    qv = [float(x) for x in _query_vec(spark, sf_dir)]
+    qv = [float(x) for x in _query_vec(emb)]
     # reduce the query driver-side with the SAME floor-rounding the
     # operator applies, so both engines score identical inputs
     rq = [
@@ -2431,7 +2426,7 @@ def emb_two_stage_topk(spark, sf_dir):
 
     emb = _t(spark, sf_dir, "embeddings")
     planes = sim_ops.hyperplane_planes(64, 16, seed=7)
-    qv = [float(x) for x in _query_vec(spark, sf_dir)]
+    qv = [float(x) for x in _query_vec(emb)]
     rq = [
         _m.floor(sum(a * b for a, b in zip(qv, p)) * 1e6 + 0.5) / 1e6
         for p in planes
@@ -5905,7 +5900,7 @@ def emb_pq_adc_topk(spark, sf_dir):
     billion-vector search path where the scan reads codes, not floats."""
     emb = _t(spark, sf_dir, "embeddings")
     coded, books = sim_ops.pq_build(emb, m=2, k=4, iterations=2, round_to=6)
-    return sim_ops.pq_adc_topk(coded, books, _query_vec(spark, sf_dir), k=10)
+    return sim_ops.pq_adc_topk(coded, books, _query_vec(emb), k=10)
 
 
 QUERIES["emb_pq_adc_topk"] = emb_pq_adc_topk
@@ -8710,7 +8705,7 @@ def emb_ann_recall(spark, sf_dir):
     the measurement itself. One scan per arm; the probe filter is the
     pushable IN predicate that prunes partitions at scale."""
     emb = _t(spark, sf_dir, "embeddings")
-    qv = _query_vec(spark, sf_dir)
+    qv = _query_vec(emb)
     exact = sim_ops.cosine_topk(emb, qv, k=10).select("vec_id")
     indexed, cents = sim_ops.ivf_build(emb, nlist=4, iterations=2, round_to=6)
     approx = sim_ops.ivf_topk(indexed, cents, qv, k=10, nprobe=1).select(
@@ -8783,7 +8778,7 @@ def docs_hybrid_rrf_search(spark, sf_dir):
             Window.partitionBy().orderBy(F.desc("bm25"), "doc_id")
         ),
     )
-    cs = sim_ops.cosine_topk(emb, _query_vec(spark, sf_dir), k=10).select(
+    cs = sim_ops.cosine_topk(emb, _query_vec(emb), k=10).select(
         F.col("vec_id").alias("doc_id"), "cos_sim"
     ).withColumn(
         "cr",
@@ -10334,7 +10329,7 @@ def emb_mmr_diversified(spark, sf_dir):
     each argmax (ties → smallest id), so the oracle replays the entire
     selection trajectory as chained CTEs."""
     emb = _t(spark, sf_dir, "embeddings")
-    qv = _query_vec(spark, sf_dir)
+    qv = _query_vec(emb)
     cands = sim_ops.cosine_topk(emb, qv, k=20)
     with_vecs = cands.join(emb.select("vec_id", "embedding"), "vec_id")
     return sim_ops.mmr_rerank(with_vecs, k=5, lam=0.7)
@@ -10614,7 +10609,7 @@ def emb_late_interaction_topk(spark, sf_dir):
     import math as _m
 
     emb = _t(spark, sf_dir, "embeddings")
-    qv = [float(x) for x in _query_vec(spark, sf_dir)]
+    qv = [float(x) for x in _query_vec(emb)]
     blocks = [qv[i * 16 : (i + 1) * 16] for i in range(4)]
     qn = [
         _m.sqrt(sum(x * x for x in b)) for b in blocks
@@ -11553,7 +11548,7 @@ def emb_ivf_store_topk(spark, sf_dir):
     path = os.path.join(_ivf_store_dir(spark, key), "emb")
     assigned.write.mode("overwrite").partitionBy("ivf_cluster").parquet(path)
     store = spark.read.parquet(path)
-    qv = [float(x) for x in _query_vec(spark, sf_dir)]
+    qv = [float(x) for x in _query_vec(emb)]
     probe = min(
         range(len(centroids)),
         key=lambda j: (

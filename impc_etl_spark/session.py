@@ -13,6 +13,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from impc_etl_spark.sources.readers import SOURCE_SCHEMAS, _read_source
+
 # Defaults sized for local[$SPARK_GRAFT_CPUS] test runs; on a real cluster the
 # same keys scale (shuffle.partitions ≈ 2-3× total cores, maxPartitionBytes
 # 128-256m so scan tasks stay balanced at 100 TB).
@@ -60,8 +62,10 @@ _BASE_CONF = {
     # Parquet scans: vectorized reader + pushdown are on by default; keep
     # them pinned so a config drift can't silently disable them.
     # ns-precision parquet timestamps (e.g. event streams) surface as long
-    # nanos; loaders convert explicitly (see queries._events) — Spark has no
-    # native ns timestamp type.
+    # nanos; the streaming reader converts explicitly
+    # (streaming.jobs.read_event_stream) — Spark has no native ns timestamp
+    # type. Source tables never get here: their declared schemas
+    # (sources.readers.SOURCE_SCHEMAS) reject a ns column.
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     "spark.sql.parquet.filterPushdown": "true",
     "spark.sql.parquet.enableVectorizedReader": "true",
@@ -125,10 +129,17 @@ def get_spark(
     # 8-core session derives 4× larger advisory partitions than the
     # 32-core one, so the SAME query can coalesce to a different shape).
     adv = os.environ.get("SPARK_GRAFT_ADVISORY_BYTES")
-    conf["spark.sql.adaptive.advisoryPartitionSizeInBytes"] = (
-        str(_parse_mem_bytes(adv)) if adv else
-        str(_derived_advisory_bytes(master, conf["spark.driver.memory"]))
-    )
+    if adv:
+        try:
+            adv_bytes = _parse_mem_bytes(adv)
+        except ValueError as exc:
+            raise ValueError(
+                f"SPARK_GRAFT_ADVISORY_BYTES={adv!r} is not a byte size "
+                "(expected e.g. 67108864, 64m or 1g)"
+            ) from exc
+    else:
+        adv_bytes = _derived_advisory_bytes(master, conf["spark.driver.memory"])
+    conf["spark.sql.adaptive.advisoryPartitionSizeInBytes"] = str(adv_bytes)
     builder = SparkSession.builder.appName(app_name).master(master)
     if extra_conf:
         conf.update(extra_conf)
@@ -152,11 +163,8 @@ def load_tables(spark: SparkSession, sf_dir: str, *names: str):
     """Read the driver's parquet tables from ``sf_dir``; returns dict.
 
     Tables: region nation customer supplier part orders lineitem events
-    documents embeddings (see TESTDATA.md).
+    documents embeddings (see TESTDATA.md). Each is read with its declared
+    schema (``sources.readers.SOURCE_SCHEMAS``): no schema-inference job,
+    and a file whose columns drift from the contract raises ``ValueError``.
     """
-    if not names:
-        names = (
-            "region", "nation", "customer", "supplier", "part",
-            "orders", "lineitem", "events", "documents", "embeddings",
-        )
-    return {n: spark.read.parquet(f"{sf_dir}/{n}.parquet") for n in names}
+    return {n: _read_source(spark, sf_dir, n) for n in names or SOURCE_SCHEMAS}

@@ -7,13 +7,159 @@ parquet boundaries.
 
 Source-file tagging uses ``input_file_name()`` + regexp (JVM-side) instead
 of the reference's Python path-parsing UDF.
+
+The 10 source tables are read with declared schemas (``SOURCE_SCHEMAS``)
+by one loader, ``_read_source``, behind ``session.load_tables`` and
+``queries._t``.
 """
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import (
+    ArrayType,
+    DataType,
+    DoubleType,
+    FloatType,
+    IntegerType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+    TimestampNTZType,
+)
+
+
+def _contract(*cols: tuple[str, DataType]) -> StructType:
+    return StructType([StructField(n, t, True) for n, t in cols])
+
+
+_I, _L, _D, _S, _TS = IntegerType(), LongType(), DoubleType(), StringType(), TimestampNTZType()
+
+# The declared schema of each source table (TESTDATA.md): exactly what
+# Spark infers from the testdata files, so reading with it returns the
+# same DataFrame without the per-read schema-inference job. Timestamps are
+# parquet TIMESTAMP(MICROS, isAdjustedToUTC=false), which Spark types as
+# timestamp_ntz.
+SOURCE_SCHEMAS: dict[str, StructType] = {
+    "region": _contract(("r_regionkey", _I), ("r_name", _S)),
+    "nation": _contract(("n_nationkey", _I), ("n_name", _S), ("n_regionkey", _I)),
+    "customer": _contract(
+        ("c_custkey", _L), ("c_name", _S), ("c_nationkey", _I),
+        ("c_acctbal", _D), ("c_mktsegment", _S),
+    ),
+    "supplier": _contract(
+        ("s_suppkey", _L), ("s_name", _S), ("s_nationkey", _I), ("s_acctbal", _D),
+    ),
+    "part": _contract(
+        ("p_partkey", _L), ("p_name", _S), ("p_brand", _S), ("p_type", _S),
+        ("p_size", _I), ("p_retailprice", _D),
+    ),
+    "orders": _contract(
+        ("o_orderkey", _L), ("o_custkey", _L), ("o_orderstatus", _S),
+        ("o_totalprice", _D), ("o_orderdate", _TS), ("o_orderpriority", _S),
+    ),
+    "lineitem": _contract(
+        ("l_orderkey", _L), ("l_partkey", _L), ("l_suppkey", _L),
+        ("l_linenumber", _I), ("l_quantity", _D), ("l_extendedprice", _D),
+        ("l_discount", _D), ("l_tax", _D), ("l_returnflag", _S),
+        ("l_linestatus", _S), ("l_shipdate", _TS),
+    ),
+    "events": _contract(
+        ("event_id", _L), ("ts", _TS), ("user_id", _L), ("event_type", _S),
+        ("value", _D), ("props", _S),
+    ),
+    "documents": _contract(
+        ("doc_id", _L), ("text", _S), ("lang", _S), ("source", _S), ("n_chars", _L),
+    ),
+    "embeddings": _contract(
+        ("vec_id", _L), ("embedding", ArrayType(FloatType(), True)), ("label", _I),
+    ),
+}
+
+
+def _first_data_file(path: str) -> str | None:
+    """``path`` itself, or the first data file (in sorted walk order) of a
+    parquet directory; None when there is none or ``path`` does not exist.
+    Skips ``_SUCCESS``-style and hidden files the way Spark's file index
+    does."""
+    if os.path.isfile(path):
+        return path
+    for root, dirs, files in os.walk(path):
+        dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
+        for f in sorted(files):
+            if not f.startswith(("_", ".")):
+                return os.path.join(root, f)
+    return None
+
+
+def _footer_columns(data_file: str) -> list[tuple[str, str]]:
+    """(name, Spark type string) per top-level column of one parquet
+    footer, typed the way Spark's parquet reader types them; a type with
+    no such mapping comes back as its pyarrow name. Driver-side footer
+    read, no Spark job."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_type
+
+    out = []
+    for f in pq.read_schema(data_file):
+        typ = None
+        # TIMESTAMP(NANOS) and INT96 both surface as timestamp[ns] here;
+        # Spark types them as long nanos and timestamp, not as the
+        # from_arrow_type answer, so report the arrow type instead
+        if not (pa.types.is_timestamp(f.type) and f.type.unit == "ns"):
+            try:
+                typ = from_arrow_type(f.type, prefer_timestamp_ntz=True).simpleString()
+            except Exception:
+                pass
+        out.append((f.name, typ or str(f.type)))
+    return out
+
+
+def _read_source(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Read source table ``name`` from ``sf_dir`` with its declared schema
+    (``SOURCE_SCHEMAS``), so building the read launches no Spark job.
+
+    Before the read, one data file's footer is checked on the driver: a
+    column whose type differs from the contract, or a column the contract
+    does not list, raises ``ValueError``; a contract column the file lacks
+    is left out of the read schema. The columns come back in file order,
+    so a valid file reads exactly as schema inference would read it.
+    Paths a local filesystem cannot open (``hdfs://``, ``s3a://``) are
+    checked against Spark's inferred schema instead, which costs the
+    inference job. The public entry points are ``session.load_tables``
+    and ``session.register_views``."""
+    contract = SOURCE_SCHEMAS[name]
+    path = f"{sf_dir}/{name}.parquet"
+    local = path[len("file:"):] if path.startswith("file:") else path
+    if "://" in local:
+        found = [(f.name, f.dataType.simpleString())
+                 for f in spark.read.parquet(path).schema]
+    else:
+        data_file = _first_data_file(local)
+        if data_file is None:
+            # a missing path makes the reader raise its usual PATH_NOT_FOUND;
+            # a directory without data files reads as an empty table
+            return spark.read.schema(contract).parquet(path)
+        found = _footer_columns(data_file)
+    declared = {f.name: f for f in contract}
+    fields = []
+    for col, typ in found:
+        # type strings, so element/field nullability (which inference
+        # drops anyway) never counts as drift
+        want = declared.get(col)
+        want_s = "no such column" if want is None else want.dataType.simpleString()
+        if typ != want_s:
+            raise ValueError(
+                f"source table {name!r} ({path}): column {col!r} is {typ}, "
+                f"the declared schema expects {want_s}"
+            )
+        fields.append(want)
+    return spark.read.schema(StructType(fields)).parquet(path)
 
 
 def read_parquet(spark: SparkSession, path: str, columns: list[str] | None = None) -> DataFrame:

@@ -18,7 +18,10 @@ SF_CORRECT = "/root/testdata/sf0.01"
 TEST_FULL = os.environ.get("SPARK_GRAFT_TEST_FULL", "") == "1"
 
 
-def fast_subset(names, always=(), stride=4):
+FAST_STRIDE = 4
+
+
+def fast_subset(names, always=(), stride=FAST_STRIDE):
     """Deterministic fast-mode sample: every ``stride``-th name in the
     given order plus everything in ``always``; the full list when
     SPARK_GRAFT_TEST_FULL=1. Stable across runs (no randomness) so a
@@ -28,6 +31,18 @@ def fast_subset(names, always=(), stride=4):
         return names
     keep = set(always)
     return [n for i, n in enumerate(names) if i % stride == 0 or n in keep]
+
+
+def pytest_report_header(config):
+    """Say which sample the parametrized sweeps run, so a green fast run
+    is never read as a full one."""
+    if TEST_FULL:
+        return "FULL MODE: every parametrization (SPARK_GRAFT_TEST_FULL=1)"
+    return (
+        f"FAST MODE (0/{FAST_STRIDE}): the oracle and plan sweeps run every "
+        f"{FAST_STRIDE}th registry entry from offset 0 plus their pinned "
+        "sets; SPARK_GRAFT_TEST_FULL=1 runs every parametrization"
+    )
 
 
 @pytest.fixture(scope="session")

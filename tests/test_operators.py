@@ -502,6 +502,16 @@ def test_session_derives_shuffle_width_via_aqe(spark):
     assert _derived_advisory_bytes("yarn", "8g") == 64 << 20
 
 
+def test_bad_advisory_bytes_names_the_setting(monkeypatch):
+    """A malformed SPARK_GRAFT_ADVISORY_BYTES fails with the variable's
+    name and value, before any session is built."""
+    from impc_etl_spark.session import get_spark
+
+    monkeypatch.setenv("SPARK_GRAFT_ADVISORY_BYTES", "64 megs")
+    with pytest.raises(ValueError, match="SPARK_GRAFT_ADVISORY_BYTES='64 megs'"):
+        get_spark("bad-advisory", master="local[1]")
+
+
 def test_cosine_topk_pandas_matches_jvm(spark):
     from impc_etl_spark.operators.similarity import cosine_topk, cosine_topk_pandas
 

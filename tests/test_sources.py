@@ -10,6 +10,8 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
+from tests.conftest import SF_SMOKE
+
 XML_DOC = """<?xml version="1.0" encoding="UTF-8"?>
 <root>
   <centre centreID="C1" pipeline="P1">
@@ -910,3 +912,126 @@ def test_roundtrip_header_ordering_is_explicit(spark, tmp_path):
     # independent check on the physical file: header literally first
     df2 = q.QUERIES["docs_tsv_roundtrip"](spark, "/root/testdata/sf0.001")
     assert df2.count() == 500
+
+
+# --- declared source schemas (sources.readers.SOURCE_SCHEMAS) ---------------
+
+
+@pytest.fixture(scope="module")
+def hostile_sf(tmp_path_factory):
+    from examples.hostile_parity import build_hostile
+
+    dst = str(tmp_path_factory.mktemp("hostile_src"))
+    build_hostile(SF_SMOKE, dst)
+    return dst
+
+
+@pytest.mark.parametrize("which", ["clean", "hostile"])
+def test_source_contract_equals_inferred_schema(spark, hostile_sf, which):
+    """Each declared schema is exactly what Spark infers from the smoke
+    testdata and from the DuckDB-written hostile copy, so the declared read
+    hands every query the DataFrame inference would have."""
+    from impc_etl_spark.session import load_tables
+    from impc_etl_spark.sources.readers import SOURCE_SCHEMAS
+
+    sf = SF_SMOKE if which == "clean" else hostile_sf
+    loaded = load_tables(spark, sf)
+    assert list(loaded) == list(SOURCE_SCHEMAS)
+    for name, contract in SOURCE_SCHEMAS.items():
+        inferred = spark.read.parquet(f"{sf}/{name}.parquet").schema
+        assert contract == inferred, name
+        assert loaded[name].schema == inferred, name
+
+
+def test_source_loader_launches_no_spark_job(spark):
+    """Loading all 10 tables builds no job (no schema inference); the
+    positive control shows the job-group readout would see one."""
+    from impc_etl_spark.session import load_tables
+
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+    tracker = sc.statusTracker()
+    group = "test_source_loader_launches_no_spark_job"
+    sc.setJobGroup(group, "declared-schema reads")
+    try:
+        load_tables(spark, SF_SMOKE)
+        bus.waitUntilEmpty()
+        assert list(tracker.getJobIdsForGroup(group)) == []
+        spark.read.parquet(f"{SF_SMOKE}/region.parquet")
+        bus.waitUntilEmpty()
+        assert len(tracker.getJobIdsForGroup(group)) >= 1
+    finally:
+        sc._jsc.clearJobGroup()
+
+
+def test_source_type_drift_raises(spark, tmp_path):
+    """A documents file with doc_id written as string fails loudly, naming
+    table, column, expected and found type, instead of being re-inferred."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from impc_etl_spark.session import load_tables
+
+    pq.write_table(
+        pa.table({"doc_id": ["1", "2"], "text": ["a", "b"]}),
+        str(tmp_path / "documents.parquet"),
+    )
+    with pytest.raises(ValueError) as err:
+        load_tables(spark, str(tmp_path), "documents")
+    msg = str(err.value)
+    assert "'documents'" in msg and "'doc_id'" in msg
+    assert "is string" in msg and "expects bigint" in msg
+
+
+def test_source_unlisted_column_raises(spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from impc_etl_spark.session import load_tables
+
+    pq.write_table(
+        pa.table({"r_regionkey": pa.array([0], pa.int32()), "r_extra": ["x"]}),
+        str(tmp_path / "region.parquet"),
+    )
+    with pytest.raises(ValueError, match="'r_extra' is string.*no such column"):
+        load_tables(spark, str(tmp_path), "region")
+
+
+def test_source_missing_contract_column_reads_own_columns(spark, tmp_path):
+    """A file lacking contract columns reads with exactly its own columns,
+    in file order — what inference returns for it."""
+    from impc_etl_spark.session import load_tables
+
+    spark.range(3).select(
+        F.col("id").alias("doc_id"), F.lit("en").alias("lang"),
+        F.lit("t").alias("text"),
+    ).write.parquet(str(tmp_path / "documents.parquet"))
+    df = load_tables(spark, str(tmp_path), "documents")["documents"]
+    assert df.columns == ["doc_id", "lang", "text"]
+    assert df.schema == spark.read.parquet(str(tmp_path / "documents.parquet")).schema
+    assert sorted(r["doc_id"] for r in df.collect()) == [0, 1, 2]
+
+
+def test_source_nullability_is_not_drift(spark, tmp_path):
+    """Required columns and non-null array elements (as pyarrow or a
+    Spark job can write them) match the contract: inference reads every
+    field as nullable too."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from impc_etl_spark.session import load_tables
+
+    elem = pa.field("element", pa.float32(), nullable=False)
+    pq.write_table(
+        pa.table({
+            "vec_id": pa.array([1, 2], pa.int64()),
+            "embedding": pa.array([[1.0, 0.0], [0.0, 1.0]], pa.list_(elem)),
+        }, schema=pa.schema([
+            pa.field("vec_id", pa.int64(), nullable=False),
+            pa.field("embedding", pa.list_(elem)),
+        ])),
+        str(tmp_path / "embeddings.parquet"),
+    )
+    df = load_tables(spark, str(tmp_path), "embeddings")["embeddings"]
+    assert df.schema == spark.read.parquet(str(tmp_path / "embeddings.parquet")).schema
+    assert df.count() == 2
